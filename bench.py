@@ -17,6 +17,10 @@ warmth) plus first-class median and floor-adjusted totals, so the
 2x-baseline gate can be read against a number that excludes both the warm
 posture and ambient host load. The cached headline leg ("value"/"queries")
 is byte-identical in protocol and position with rounds 1-10.
+
+The JSON also names its host (``host``: nproc, SPARK_GRAFT_CPUS, master,
+default parallelism, memory, CPU model) and counts the generated classes
+each timed leg compiled (``codegen_compiles``, see kse/obs.py).
 """
 
 from __future__ import annotations
@@ -31,6 +35,7 @@ sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 from kse import registry  # noqa: E402
 from kse.catalog import cache_tables, prepare_local_layout, release_tables  # noqa: E402
+from kse.obs import codegen_compiles, host_block  # noqa: E402
 from kse.session import DEFAULT_SF_DIR, get_session  # noqa: E402
 
 HEADLINE = [
@@ -138,7 +143,12 @@ def main() -> None:
     # build as a SEPARATE sequential job, so e.g. q_join_multiway (3
     # broadcast dims) runs 4 jobs and pays the dispatch floor 4 times per
     # action. Reported so floor adjustment can be per-job, not per-query.
-    def time_headline(tag: str) -> tuple[dict[str, float], dict[str, float], dict[str, int]]:
+    #
+    # Generated classes compiled during the leg: 0 on a warm session whose
+    # codegen class cache holds the leg's working set (kse/session.py); a
+    # count here means the timed runs paid Janino compiles and fresh JIT.
+    def time_headline(tag: str) -> tuple[dict[str, float], dict[str, float], dict[str, int], int]:
+        compiles0 = codegen_compiles(spark)
         timings: dict[str, float] = {}
         medians: dict[str, float] = {}
         n_jobs: dict[str, int] = {}
@@ -170,9 +180,10 @@ def main() -> None:
             else:
                 timings[name] = -1.0
                 medians[name] = -1.0
-        return timings, medians, n_jobs
+        return timings, medians, n_jobs, codegen_compiles(spark) - compiles0
 
-    timings, medians, n_jobs = time_headline("bench")
+    timings, medians, n_jobs, compiles = time_headline("bench")
+    codegen = {"cached": compiles}
     # Re-sample the floor AFTER the timed loop and keep the min: a load
     # spike during either window would otherwise inflate (or deflate) the
     # adjustment. Clamp at the fastest measured query — a floor estimate
@@ -200,7 +211,7 @@ def main() -> None:
         for _ in range(2):  # same global warm-up protocol as the cached leg
             for name in HEADLINE:
                 try_materialize(name)
-        raw_timings, raw_medians, raw_jobs = time_headline("bench-raw")
+        raw_timings, raw_medians, raw_jobs, codegen["uncached"] = time_headline("bench-raw")
     except Exception as exc:
         errors.setdefault("uncached_leg", f"{type(exc).__name__}: {exc}"[:500])
 
@@ -362,7 +373,9 @@ def main() -> None:
         "uncached_total": uncached_total,
         "uncached_median_total": uncached_median_total,
         "jobs_per_query_uncached": raw_jobs,
+        "codegen_compiles": codegen,
         "sf": sf,
+        "host": host_block(spark),
         "layout_s": round(layout_s, 2),
         "cache_s": round(cache_s, 2),
         "dispatch_floor_s": round(floor, 4),

@@ -264,7 +264,7 @@ GROUP BY event_type, k
         "path remains the parse-once-extract-many shape (q_fn_variant). "
         "CLOSED (r10): the last untried lever on the 15-19x comparator "
         "ratio — shipping the parse to Python workers as Arrow batches "
-        "and parsing with orjson (tools/json_ab.py, value parity "
+        "and parsing with orjson (OPTIMIZATION_r10.md, value parity "
         "asserted, interleaved best-of-7 at the 10x tier) — LOSES: "
         "mapInPandas+orjson 618 ms best / 698 ms median vs "
         "get_json_object 385 / 509. The Arrow round-trip of props both "

@@ -4148,7 +4148,7 @@ HAVING count(DISTINCT doc_id) > 1
         "and the window width trades recall for row count linearly. "
         "Production swaps md5 for xxhash64 (kept here for oracle "
         "parity, same discipline as MinHash). Aggregate shape A/B'd "
-        "(r10, tools/substr_ab.py, parity-asserted interleaved "
+        "(r10, OPTIMIZATION_r10.md, parity-asserted interleaved "
         "best-of-5 at 10x): this single mixed countDistinct+plain "
         "aggregate, 3.14 s best / 3.26 s median, BEATS a manual "
         "two-level (gram,doc)-then-gram aggregation, 3.32 / 3.49 — "

@@ -798,7 +798,7 @@ GROUP BY c_count
         "(DuckDB 71.5 -> 51 ms across rounds, Spark flat), the class the "
         "SCALE canary gate now pins. Bloom-filter pre-filtering of the "
         "fact side (guide SS3.2, the last untried lever — r10 verdict "
-        "item 5) measured and CLOSED in r11 (tools/q13_bloom_ab.py, 10x "
+        "item 5) measured and CLOSED in r11 (OPTIMIZATION_r11.md, 10x "
         "tier, parity asserted on 28 rows): o_custkey is a foreign key "
         "into customer, so a filter over ALL customer keys prunes ~zero "
         "orders — the broadcast semi-join form read 821/850 ms "

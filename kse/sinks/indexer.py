@@ -30,6 +30,11 @@ from dataclasses import dataclass
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+# Seconds one ``_bulk`` request may wait on the ES node (connect and each
+# socket read). Without it a hung node blocks the writing task forever; a
+# timeout raises instead, failing the micro-batch so foreachBatch replays it.
+ES_HTTP_TIMEOUT_S = 60.0
+
 
 def _rows_to_actions(rows: Iterable, id_col: str) -> Iterable[tuple[str, dict]]:
     for row in rows:
@@ -120,7 +125,7 @@ class EsBulkIndexer:
         req = urllib.request.Request(
             url, data=payload, headers={"Content-Type": "application/x-ndjson"}
         )
-        with urllib.request.urlopen(req) as resp:  # pragma: no cover (no ES here)
+        with urllib.request.urlopen(req, timeout=ES_HTTP_TIMEOUT_S) as resp:
             return resp.status
 
     def foreach_batch(self, index: str, id_col: str) -> Callable[[DataFrame, int], None]:

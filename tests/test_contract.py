@@ -370,6 +370,36 @@ def test_no_recompute_diamond_regression(spark):
         registry.invalidate_plans(spark=spark)
 
 
+def test_warm_pass_recompiles_no_generated_classes(spark):
+    """The engine session's codegen class cache holds the bench's warm mix:
+    a second pass over it compiles nothing. At Spark's default of 100
+    entries the mix's working set does not fit, and every pass evicts and
+    recompiles generated classes (see kse/session.py)."""
+    import bench
+    from kse.obs import codegen_compiles
+
+    # Start from an empty class cache, so what earlier tests left in it
+    # cannot make the first pass look small. The cache is private to
+    # Spark's CodeGenerator object; invalidating it only costs recompiles.
+    jvm = spark.sparkContext._jvm
+    field = jvm.java.lang.Class.forName(
+        "org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator$"
+    ).getDeclaredField("cache")
+    field.setAccessible(True)
+    field.get(None).invalidateAll()
+
+    qs = registry.all_queries()
+    mix = bench.HEADLINE + ["q_win_rank", "q_tpch_q1", "q_udf_pandas_grouped"]
+    compiled = []
+    for _ in range(2):
+        before = codegen_compiles(spark)
+        for name in mix:
+            bench.materialize(qs[name].fn(spark, SF_SMOKE))
+        compiled.append(codegen_compiles(spark) - before)
+    assert compiled[0] > 100, f"the mix no longer outgrows Spark's default cache: {compiled}"
+    assert compiled[1] == 0, f"warm pass recompiled generated classes: {compiled}"
+
+
 def test_scale_canary_drift_logic(tmp_path):
     """The SCALE comparator canary (tools/scale10.canary_check): in-band
     readings pass untouched, a transient spike is healed by the injected
@@ -729,3 +759,41 @@ def test_trailing_band_windows_to_last_k_artifacts(tmp_path):
     assert bands["q"] == (0.050, 0.058), bands  # the old 9.0 aged out
     meds = trailing_medians(str(tmp_path), 10)
     assert abs(meds["q"] - 0.055) < 1e-12, meds  # median keeps full history
+
+
+def test_scd2_reference_is_the_true_median(tmp_path):
+    """The scd2 100x bound is anchored on the median of the committed 10x
+    readings. For an even count that is the mean of the middle two, not
+    the upper-middle reading, so the bound is never the looser of the two."""
+    import json
+
+    from tools.scale10 import scd2_reference
+
+    assert scd2_reference(str(tmp_path)) is None
+    for i, s in enumerate([3.0, 0.5, 10.0, 1.0]):
+        (tmp_path / f"SCALE_r0{i}.json").write_text(
+            json.dumps({"rows_mult": 10, "queries": {"q_sql_scd2_incremental": {"spark": s}}})
+        )
+    (tmp_path / "SCALE_r04.json").write_text(  # other tiers do not count
+        json.dumps({"rows_mult": 100, "queries": {"q_sql_scd2_incremental": {"spark": 0.1}}})
+    )
+    assert scd2_reference(str(tmp_path)) == (0.5, 2.0)  # the old pick read 3.0
+
+
+def test_canary_ok_is_null_when_both_canaries_skipped():
+    """--spark-only --once checks neither timing column; the artifact must
+    say so (null), not claim a passing canary."""
+    from tools.scale10 import CANARY_THRESHOLD, overall_canary_ok
+
+    def skipped(why):
+        return {"threshold": CANARY_THRESHOLD, "flagged": {}, "ok": True, "skipped": why}
+
+    def checked(ok):
+        return {"threshold": CANARY_THRESHOLD, "flagged": {}, "ok": ok}
+
+    assert overall_canary_ok(skipped("--spark-only"), skipped("--once")) is None
+    assert overall_canary_ok(skipped("--spark-only"), checked(True)) is True
+    assert overall_canary_ok(skipped("--spark-only"), checked(False)) is False
+    assert overall_canary_ok(checked(True), skipped("--once")) is True
+    assert overall_canary_ok(checked(False), checked(True)) is False
+    assert overall_canary_ok(checked(True), checked(True)) is True

@@ -305,6 +305,36 @@ def test_es_bulk_indexer_payloads(spark, tmp_path):
     assert all(m["index"]["_index"] == "docs" for m in metas)
 
 
+def test_es_default_transport_has_timeout(monkeypatch):
+    """The production urllib transport bounds every _bulk request, so a hung
+    ES node fails the micro-batch (and foreachBatch replays it) instead of
+    blocking the task forever."""
+    import urllib.request
+
+    from kse.sinks import indexer
+
+    calls = []
+
+    class _Resp:
+        status = 200
+
+        def __enter__(self):
+            return self
+
+        def __exit__(self, *exc):
+            return False
+
+    def fake_urlopen(req, *args, **kwargs):
+        calls.append((req.full_url, args, kwargs))
+        return _Resp()
+
+    monkeypatch.setattr(urllib.request, "urlopen", fake_urlopen)
+    status = EsBulkIndexer("http://es:9200")._default_transport("http://es:9200/_bulk", b"{}\n")
+    assert status == 200
+    assert calls == [("http://es:9200/_bulk", (), {"timeout": indexer.ES_HTTP_TIMEOUT_S})]
+    assert 0 < indexer.ES_HTTP_TIMEOUT_S < float("inf")
+
+
 def test_rate_source_schema(spark):
     df = rate_events(spark)
     assert df.isStreaming
