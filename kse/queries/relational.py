@@ -1387,7 +1387,7 @@ GROUP BY l_linestatus
         "hash-matches with no rounding device. Same r8 constant shave as "
         "the continuous twin (single-scan explode + checkpointed "
         "histogram): 4.48 s -> 3.08 s best-of-3 at 10x. Pass-count "
-        "profile (r10, tools/pctl_profile.py, the verdict's >8x-clean "
+        "profile (r10, OPTIMIZATION_r10.md, the verdict's >8x-clean "
         "contingency): full query 1.94 s best at 10x, of which the "
         "pass-1 histogram ALONE (one spillable hash aggregate over the "
         "12M-row explode, 3 jobs) is 1.19 s and 11-job dispatch is "

@@ -15,6 +15,7 @@ from __future__ import annotations
 
 from collections.abc import Callable
 from dataclasses import dataclass
+from itertools import zip_longest
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -121,83 +122,32 @@ def _category(name: str) -> str:
     return parts[1] if parts[0] in ("q", "src") and len(parts) > 1 else parts[0]
 
 
-# Never-driver-sampled queries the r5 verdict requires in the r6 driver
-# prefix: the 7 remaining SURVEY §2.10 headliners and the 13 TPC-H shapes.
-# Names verified here drop out automatically (the list is filtered to the
-# still-fresh set at ordering time).
-_DRIVER_PRIORITY = [
-    "q_llm_sim_lsh_ann",
-    "q_llm_text_stats",
-    "q_llm_text_tokens",
-    "q_llm_tfidf",
-    "q_llm_multimodal",
-    "q_llm_quality_filter",
-    "q_llm_embed_stats",
-    "q_tpch_q1",
-    "q_tpch_q2",
-    "q_tpch_q9",
-    "q_tpch_q11",
-    "q_tpch_q12",
-    "q_tpch_q13",
-    "q_tpch_q15",
-    "q_tpch_q16",
-    "q_tpch_q17",
-    "q_tpch_q19",
-    "q_tpch_q20",
-    "q_tpch_q21",
-    "q_tpch_q22",
-]
+# Names the driver must re-prove before anything else: it hash-checks a
+# fixed-size prefix of queries() (50 names) against DuckDB each round, so
+# these lead the order. Rule: a new or changed (plan, oracle) pair goes
+# here; a name leaves once a CORRECTNESS_r*.json row shows it green on its
+# current pair.
+REVERIFY: tuple[str, ...] = ()
+
+
+def _round_robin(names: list[str]) -> list[str]:
+    """One name per category in turn, so any prefix covers every SURVEY §2
+    family; category and within-category order follow registration."""
+    groups: dict[str, list[str]] = {}
+    for name in names:
+        groups.setdefault(_category(name), []).append(name)
+    ordered: list[str] = []
+    for batch in zip_longest(*groups.values()):
+        ordered.extend(n for n in batch if n is not None)
+    return ordered
 
 
 def _ordered_names() -> list[str]:
-    """Registry names ordered so a sampled prefix maximizes NEW driver
-    coverage: queries the per-round driver has never hash-verified green
-    (kse/_driver_verified.py, regenerated from the CORRECTNESS_r*.json
-    history by tools/update_driver_verified.py) come first, then the
-    already-verified remainder — each block in category round-robin so any
-    prefix still covers every SURVEY §2 family roughly evenly. Rationale:
-    the driver verifies a fixed-size prefix (50 queries) per round; with
-    175 registered queries a static ordering re-verifies the same prefix
-    forever and leaves the tail local-only. Deterministic: category order
-    and within-category order both follow registration order."""
-    from itertools import zip_longest
-
-    from kse._driver_verified import DRIVER_REQUEUE, DRIVER_VERIFIED
-
-    def round_robin(names: list[str]) -> list[str]:
-        groups: dict[str, list[str]] = {}
-        for name in names:
-            groups.setdefault(_category(name), []).append(name)
-        ordered: list[str] = []
-        for batch in zip_longest(*groups.values()):
-            ordered.extend(n for n in batch if n is not None)
-        return ordered
-
-    requeue = [n for n in _REGISTRY if n in DRIVER_REQUEUE]
-    fresh = [
-        n for n in _REGISTRY
-        if n not in DRIVER_VERIFIED and n not in DRIVER_REQUEUE
-    ]
-    seen = [n for n in _REGISTRY if n in DRIVER_VERIFIED]
-    # Round-6 prefix policy (r5 verdict items #1/#2): the never-sampled
-    # SURVEY §2.10 headliners and TPC-H shapes lead outright, then other
-    # never-sampled queries, with AT MOST ~10 re-proof (requeue) slots
-    # inside a 50-query driver prefix — r5 spent half its sample
-    # re-proving battery-changed pairs and the never-sampled pool barely
-    # shrank. Requeued pairs are all green in the local exact-value
-    # harness (stricter than the driver hash); they drain at 10/round
-    # behind the fresh burn-down.
-    priority = [n for n in _DRIVER_PRIORITY if n in fresh]
-    fresh_rest = round_robin([n for n in fresh if n not in set(priority)])
-    rq = round_robin(requeue)
-    n_fresh_lead = max(0, 40 - len(priority))
-    return (
-        priority
-        + fresh_rest[:n_fresh_lead]
-        + rq[:10]
-        + fresh_rest[n_fresh_lead:]
-        + rq[10:]
-        + round_robin(seen)
+    """Registry names in driver order: REVERIFY first, then the rest, each
+    block in category round-robin."""
+    reverify = set(REVERIFY)
+    return _round_robin([n for n in _REGISTRY if n in reverify]) + _round_robin(
+        [n for n in _REGISTRY if n not in reverify]
     )
 
 

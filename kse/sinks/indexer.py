@@ -106,27 +106,44 @@ class JsonlIndexer:
         return out
 
 
+def _raise_on_rejected_items(body: bytes) -> None:
+    """ES answers ``_bulk`` with HTTP 200 even when it rejects items (a 429
+    under back-pressure, a mapping conflict): ``"errors": true`` and a
+    per-item ``error``. Raising fails the micro-batch, which foreachBatch
+    replays on restart — idempotent through ``_id``."""
+    resp = json.loads(body)
+    if not resp.get("errors"):
+        return
+    first = next(
+        (r for item in resp.get("items", []) for r in item.values() if "error" in r), {}
+    )
+    raise IOError(
+        f"bulk index rejected items; first _id={first.get('_id')} "
+        f"status={first.get('status')} error={first.get('error', {}).get('type')}"
+    )
+
+
 @dataclass
 class EsBulkIndexer:
     """Elasticsearch REST bulk indexer (production backend).
 
-    ``transport`` is ``(url, payload) -> status`` — ``urllib`` in
+    ``transport`` is ``(url, payload) -> (status, body)`` — ``urllib`` in
     production, a recording fake in tests. Injected so the bulk-assembly
     logic is testable without a cluster.
     """
 
     base_url: str
     bulk_size: int = 1000
-    transport: Callable[[str, bytes], int] | None = None
+    transport: Callable[[str, bytes], tuple[int, bytes]] | None = None
 
-    def _default_transport(self, url: str, payload: bytes) -> int:
+    def _default_transport(self, url: str, payload: bytes) -> tuple[int, bytes]:
         import urllib.request
 
         req = urllib.request.Request(
             url, data=payload, headers={"Content-Type": "application/x-ndjson"}
         )
         with urllib.request.urlopen(req, timeout=ES_HTTP_TIMEOUT_S) as resp:
-            return resp.status
+            return resp.status, resp.read()
 
     def foreach_batch(self, index: str, id_col: str) -> Callable[[DataFrame, int], None]:
         base_url, bulk_size = self.base_url, self.bulk_size
@@ -139,9 +156,10 @@ class EsBulkIndexer:
                 def flush():
                     if buf:
                         payload = ("\n".join(buf) + "\n").encode()
-                        status = transport(f"{base_url}/_bulk", payload)
+                        status, body = transport(f"{base_url}/_bulk", payload)
                         if status >= 300:
                             raise IOError(f"bulk index failed: HTTP {status}")
+                        _raise_on_rejected_items(body)
                         buf.clear()
 
                 for doc_id, doc in _rows_to_actions(rows, id_col):

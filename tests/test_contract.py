@@ -27,6 +27,45 @@ def test_registry_shape(spark):
     assert len(osql) >= 65  # oracle coverage stays high
 
 
+def test_driver_order_lists_every_name_once():
+    registry.queries()  # loads every query module
+    order = registry._ordered_names()
+    assert sorted(order) == sorted(registry._REGISTRY)
+    assert set(registry.REVERIFY) <= set(order)
+
+
+def test_reverify_names_lead_driver_order(monkeypatch):
+    tail = list(registry.queries())[-2:]
+    monkeypatch.setattr(registry, "REVERIFY", tuple(tail))
+    assert set(list(registry.queries())[:2]) == set(tail)
+
+
+def test_driver_sample_covers_every_family():
+    """The driver hash-checks the first 50 names; the category round-robin
+    makes that sample touch every query family."""
+    order = list(registry.queries())
+    families = {registry._category(n) for n in order}
+    assert len(families) == 27
+    assert {registry._category(n) for n in order[:50]} == families
+
+
+def test_tool_paths_named_in_code_and_docs_exist():
+    """Every ``tools/<name>.py`` that code or docs point a reader at exists."""
+    import re
+    from pathlib import Path
+
+    root = Path(__file__).resolve().parent.parent
+    sources = [root / "bench.py", root / "README.md", root / ".claude/skills/verify/SKILL.md"]
+    sources += sorted((root / "kse").rglob("*.py"))
+    missing = {
+        f"{src.relative_to(root)}: {ref}"
+        for src in sources
+        for ref in re.findall(r"\btools/\w+\.py", src.read_text())
+        if not (root / ref).exists()
+    }
+    assert not missing, sorted(missing)
+
+
 def test_every_query_runs_on_smoke_sf(spark):
     """Every registered query executes and yields a stable schema at sf0.001."""
     for name, q in registry.all_queries().items():

@@ -293,7 +293,7 @@ def test_es_bulk_indexer_payloads(spark, tmp_path):
 
         with open(_os.path.join(_dir, _uuid.uuid4().hex), "wb") as f:
             f.write(payload)
-        return 200
+        return 200, b'{"errors": false, "items": []}'
 
     idx = EsBulkIndexer("http://es:9200", bulk_size=2, transport=transport)
     df = spark.createDataFrame([(1, "a"), (2, "b"), (3, "c")], "doc_id long, body string")
@@ -318,6 +318,9 @@ def test_es_default_transport_has_timeout(monkeypatch):
     class _Resp:
         status = 200
 
+        def read(self):
+            return b'{"errors": false, "items": []}'
+
         def __enter__(self):
             return self
 
@@ -329,10 +332,32 @@ def test_es_default_transport_has_timeout(monkeypatch):
         return _Resp()
 
     monkeypatch.setattr(urllib.request, "urlopen", fake_urlopen)
-    status = EsBulkIndexer("http://es:9200")._default_transport("http://es:9200/_bulk", b"{}\n")
+    status, _ = EsBulkIndexer("http://es:9200")._default_transport("http://es:9200/_bulk", b"{}\n")
     assert status == 200
     assert calls == [("http://es:9200/_bulk", (), {"timeout": indexer.ES_HTTP_TIMEOUT_S})]
     assert 0 < indexer.ES_HTTP_TIMEOUT_S < float("inf")
+
+
+def test_es_rejected_bulk_items_fail_the_batch(spark):
+    """ES answers _bulk with HTTP 200 and ``errors: true`` when it rejects
+    items; the write must fail (so the micro-batch replays), not drop them."""
+
+    def transport(url, payload):
+        import json as _json
+
+        ids = [_json.loads(line)["index"]["_id"] for line in payload.decode().splitlines()[::2]]
+        items = [
+            {"index": {"_id": i, "status": 429, "error": {"type": "es_rejected_execution_exception"}}}
+            if i == "2"
+            else {"index": {"_id": i, "status": 201}}
+            for i in ids
+        ]
+        return 200, _json.dumps({"errors": "2" in ids, "items": items}).encode()
+
+    idx = EsBulkIndexer("http://es:9200", transport=transport)
+    df = spark.createDataFrame([(1, "a"), (2, "b"), (3, "c")], "doc_id long, body string")
+    with pytest.raises(Exception, match=r"_id=2 status=429 error=es_rejected_execution_exception"):
+        write_batch_to_index(df.coalesce(1), idx, index="docs", id_col="doc_id")
 
 
 def test_rate_source_schema(spark):
